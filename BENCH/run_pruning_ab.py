@@ -1,25 +1,19 @@
 #!/usr/bin/env python
-"""Block-max pruning A/B on the zipf corpus (the skew it exists for).
+"""search_many throughput on the zipf corpus (the skew block-max bounds
+separate on).
 
-The uniform F1 corpus has flat tf/norm distributions: every 128-block's
-upper bound ties the k-th score, nothing can be rank-safely skipped, and
-forcing the pruned path only adds per-term Python (measured 921->255 q/s
-in r6 — which is why prune_df defaults OFF).  This harness builds the
-`--distribution zipf` corpus (zipfian df, zipfian tf, topical locality in
-doc-id order — corpus._make_row_zipf) where block bounds genuinely
-separate, then measures the SAME search_many battery with pruning off vs
-on, in fresh interleaved subprocesses:
+The opt-in per-term pruned top-k this harness used to A/B against the
+batched exhaustive kernel is deleted: over its committed 1M-doc zipf runs
+it measured 1.54, 1.17, 1.011 and 0.957x (pruning_ab_{r7,r8,probe,
+bench_last}.json), short of the >=1.2x-in-every-run bar for keeping a
+second path.  The harness now times the one remaining path, so bench.py's
+`zipf_pruning` probe keeps running and its JSON keys stay; the pruned-side
+keys (`qps_pruned_best`, `pruned_speedup`, `rank_identity`) are null.
 
   1. build the zipf packed index ONCE;
-  2. per repeat: one subprocess per mode (exhaustive / pruned), each warms
-     up untimed, then times `--inner` batches and reports its best;
-  3. assert rank identity between the two modes (k rows per term,
-     (term, doc_id, round(score,4)) sets equal);
-  4. report best q/s per mode + the pruned/exhaustive speedup.
-
-Done-criterion from the r6 verdict: pruned < exhaustive wall-time at equal
-top-k on a dense-term battery, rank-identity pinned, with the flat-corpus
-no-harm guard (default prune_df=None) untouched.
+  2. per repeat: one fresh subprocess warms up untimed, then times
+     `--inner` batches and reports its best;
+  3. report the best q/s.
 """
 
 from __future__ import annotations
@@ -45,35 +39,14 @@ spark = get_spark(app_name="pruning-ab", master=f"local[{{cpus}}]",
 spark.sparkContext.setLogLevel("ERROR")
 ss = SegmentSearcher(spark, {index_dir!r})
 terms = [VOCAB[i] for i in range({batch})]
-prune = {prune!r}
-ss.search_many(terms, k=10, prune_df=prune).count()  # warm-up (untimed)
+ss.search_many(terms, k=10).count()  # warm-up (untimed)
 best = None
 for _ in range({inner}):
     t0 = time.time()
-    ss.search_many(terms, k=10, prune_df=prune).count()
+    ss.search_many(terms, k=10).count()
     dt = time.time() - t0
     best = dt if best is None or dt < best else best
-print(json.dumps({{"mode": "pruned" if prune is not None else "exhaustive",
-                   "sec": best, "qps": {batch} / best}}))
-spark.stop()
-"""
-
-IDENTITY = r"""
-import json, sys
-sys.path.insert(0, {repo!r})
-from lucene_solr_intervals_spark.session import get_spark
-from lucene_solr_intervals_spark.search.wand import SegmentSearcher
-from lucene_solr_intervals_spark.corpus import VOCAB
-
-spark = get_spark(app_name="pruning-id", master="local[{cpus}]",
-                  shuffle_partitions={cpus} * 2)
-spark.sparkContext.setLogLevel("ERROR")
-ss = SegmentSearcher(spark, {index_dir!r})
-terms = [VOCAB[i] for i in range({batch})]
-key = lambda r: (r["query_term"], int(r["doc_id"]), round(float(r["score"]), 4))
-a = sorted(map(key, ss.search_many(terms, k=10).collect()))
-b = sorted(map(key, ss.search_many(terms, k=10, prune_df={prune}).collect()))
-print(json.dumps({{"identical": a == b, "rows": len(a)}}))
+print(json.dumps({{"mode": "exhaustive", "sec": best, "qps": {batch} / best}}))
 spark.stop()
 """
 
@@ -110,7 +83,6 @@ def main() -> None:
     ap.add_argument("--repeats", type=int, default=3)
     ap.add_argument("--inner", type=int, default=3)
     ap.add_argument("--cpus", type=int, default=8)
-    ap.add_argument("--prune-df", type=int, default=2048)
     ap.add_argument("--index-dir", default="/tmp/lsi_pruning_ab_idx")
     ap.add_argument("--skip-build", action="store_true")
     ap.add_argument("--codec", default="for128")
@@ -121,33 +93,23 @@ def main() -> None:
         print(f"[pruning-ab] building {args.docs} zipf docs once ...", flush=True)
         build_once(args.index_dir, args.docs, args.segments, args.codec)
 
-    print("[pruning-ab] rank-identity check ...", flush=True)
-    ident = run(IDENTITY.format(repo=REPO, cpus=args.cpus, index_dir=args.index_dir,
-                                batch=min(args.batch, 256), prune=args.prune_df))
-    print(f"[pruning-ab] identity: {json.dumps(ident)}", flush=True)
-    assert ident["identical"], "pruned path diverged from exhaustive ranking"
-
-    runs: dict[str, list[dict]] = {"exhaustive": [], "pruned": []}
+    runs = []
     for i in range(args.repeats):
-        for prune in (None, args.prune_df):
-            r = run(CHILD.format(repo=REPO, cpus=args.cpus, index_dir=args.index_dir,
-                                 batch=args.batch, inner=args.inner, prune=prune))
-            runs[r["mode"]].append(r)
-            print(f"[pruning-ab] repeat {i+1} {r['mode']}: {json.dumps(r)}", flush=True)
+        r = run(CHILD.format(repo=REPO, cpus=args.cpus, index_dir=args.index_dir,
+                             batch=args.batch, inner=args.inner))
+        runs.append(r)
+        print(f"[pruning-ab] repeat {i+1}: {json.dumps(r)}", flush=True)
 
-    ex = max(r["qps"] for r in runs["exhaustive"])
-    pr = max(r["qps"] for r in runs["pruned"])
     result = {
         "corpus_docs": args.docs,
         "distribution": "zipf",
         "codec": args.codec,
         "batch": args.batch,
         "cpus": args.cpus,
-        "prune_df": args.prune_df,
-        "rank_identity": ident,
-        "qps_exhaustive_best": round(ex, 1),
-        "qps_pruned_best": round(pr, 1),
-        "pruned_speedup": round(pr / ex, 3),
+        "rank_identity": None,
+        "qps_exhaustive_best": round(max(r["qps"] for r in runs), 1),
+        "qps_pruned_best": None,
+        "pruned_speedup": None,
         "all_runs": runs,
     }
     print(json.dumps(result))

@@ -694,11 +694,16 @@ def build_segments(
     driver_tail = n_total * 96 <= int(
         os.environ.get("LSI_DRIVER_BUILD_MAX_BYTES", str(32 << 20))
     )
+    # explicit schema: an empty corpus writes no postings file to infer from
+    sidecar = (
+        spark.read.schema(POSTINGS_SCHEMA)
+        .parquet(os.path.join(index_dir, "postings"))
+        .where(F.col("term") == DOCS_MARKER)
+    )
+    seg_stats, base_by_seg = [], {}  # an empty corpus has no sidecar rows
     if driver_tail:
         side_pdf = (
-            spark.read.parquet(os.path.join(index_dir, "postings"))
-            .where(F.col("term") == DOCS_MARKER)
-            .select(
+            sidecar.select(
                 "seg", "df", "ttf", "doc_ids", "tfs", "positions",
                 "block_last", "block_max_tf",
             )
@@ -706,72 +711,70 @@ def build_segments(
             .sort_values("seg")
             .reset_index(drop=True)
         )
-        docs_pdf = _docs_from_sidecar(side_pdf)
-        norms_pdf = _norms_from_sidecar(side_pdf)
-        _write_seg_partitioned(docs_pdf, os.path.join(index_dir, "docs"), "docs")
-        _write_seg_partitioned(norms_pdf, os.path.join(index_dir, "norms"), "norms")
-        seg_stats = [
-            {
-                "seg": int(r["seg"]),
-                "n_docs": int(r["df"]),
-                "sum_doclen": int(r["ttf"]),
-                "ntok_blob": r["block_max_tf"],
+        if len(side_pdf):
+            docs_pdf = _docs_from_sidecar(side_pdf)
+            norms_pdf = _norms_from_sidecar(side_pdf)
+            _write_seg_partitioned(docs_pdf, os.path.join(index_dir, "docs"), "docs")
+            _write_seg_partitioned(norms_pdf, os.path.join(index_dir, "norms"), "norms")
+            seg_stats = [
+                {
+                    "seg": int(r["seg"]),
+                    "n_docs": int(r["df"]),
+                    "sum_doclen": int(r["ttf"]),
+                    "ntok_blob": r["block_max_tf"],
+                }
+                for _, r in side_pdf.iterrows()
+            ]
+            base_by_seg = {
+                int(s): int(b) for s, b in zip(norms_pdf["seg"], norms_pdf["doc_base"])
             }
-            for _, r in side_pdf.iterrows()
-        ]
-        base_by_seg = {
-            int(s): int(b) for s, b in zip(norms_pdf["seg"], norms_pdf["doc_base"])
-        }
     else:
-        sidecar = (
-            spark.read.parquet(os.path.join(index_dir, "postings"))
-            .where(F.col("term") == DOCS_MARKER)
-            .persist()
-        )
-        sidecar.count()  # materialize the cache once, before concurrent readers
-        docs_df = sidecar.mapInPandas(
-            lambda it: (_docs_from_sidecar(p) for p in it), DOCS_SCHEMA
-        )
-        norms = sidecar.mapInPandas(
-            lambda it: (_norms_from_sidecar(p) for p in it), NORMS_SCHEMA
-        ).persist()
-        final_norms = os.path.join(index_dir, "norms")
+        sidecar = sidecar.persist()
+        # materialize the cache once, before concurrent readers
+        if sidecar.count():
+            docs_df = sidecar.mapInPandas(
+                lambda it: (_docs_from_sidecar(p) for p in it), DOCS_SCHEMA
+            )
+            norms = sidecar.mapInPandas(
+                lambda it: (_norms_from_sidecar(p) for p in it), NORMS_SCHEMA
+            ).persist()
+            final_norms = os.path.join(index_dir, "norms")
 
-        # docs and norms derive independently from the cached sidecar: run the
-        # two writes as concurrent jobs (guide §2.6 — actions are sequential
-        # only because driver code calls them sequentially); each is mostly
-        # fixed job/commit overhead at any scale, so overlapping them removes
-        # ~min(docs, norms) from the build tail
-        from concurrent.futures import ThreadPoolExecutor
+            # docs and norms derive independently from the cached sidecar: run the
+            # two writes as concurrent jobs (guide §2.6 — actions are sequential
+            # only because driver code calls them sequentially); each is mostly
+            # fixed job/commit overhead at any scale, so overlapping them removes
+            # ~min(docs, norms) from the build tail
+            from concurrent.futures import ThreadPoolExecutor
 
-        def _write_docs():
-            docs_df.write.mode("overwrite").option(
-                "partitionOverwriteMode", "static"
-            ).partitionBy("seg").parquet(os.path.join(index_dir, "docs"))
+            def _write_docs():
+                docs_df.write.mode("overwrite").option(
+                    "partitionOverwriteMode", "static"
+                ).partitionBy("seg").parquet(os.path.join(index_dir, "docs"))
 
-        def _write_norms():
-            # partitioned by seg so merges/NRT can commit one partition at a time
-            norms.write.mode("overwrite").partitionBy("seg").parquet(final_norms)
+            def _write_norms():
+                # partitioned by seg so merges/NRT can commit one partition at a time
+                norms.write.mode("overwrite").partitionBy("seg").parquet(final_norms)
 
-        with ThreadPoolExecutor(max_workers=2) as ex:
-            for f in [ex.submit(_write_docs), ex.submit(_write_norms)]:
-                f.result()
+            with ThreadPoolExecutor(max_workers=2) as ex:
+                for f in [ex.submit(_write_docs), ex.submit(_write_norms)]:
+                    f.result()
 
-        # manifest: per-segment doc stats from the sidecar aggregates;
-        # doc_base comes from the already-computed (cached) norms relation —
-        # no read-back of the just-written parquet
-        seg_stats = sidecar.select(
-            "seg",
-            F.col("df").alias("n_docs"),
-            F.col("ttf").alias("sum_doclen"),
-            F.col("block_max_tf").alias("ntok_blob"),
-        ).collect()
-        base_by_seg = {
-            int(r["seg"]): int(r["doc_base"])
-            for r in norms.select("seg", "doc_base").collect()
-        }
+            # manifest: per-segment doc stats from the sidecar aggregates;
+            # doc_base comes from the already-computed (cached) norms relation —
+            # no read-back of the just-written parquet
+            seg_stats = sidecar.select(
+                "seg",
+                F.col("df").alias("n_docs"),
+                F.col("ttf").alias("sum_doclen"),
+                F.col("block_max_tf").alias("ntok_blob"),
+            ).collect()
+            base_by_seg = {
+                int(r["seg"]): int(r["doc_base"])
+                for r in norms.select("seg", "doc_base").collect()
+            }
+            norms.unpersist()
         sidecar.unpersist()
-        norms.unpersist()
     wall = time.time() - t0
     segments = [
         {
@@ -802,7 +805,7 @@ def build_segments(
         "segments": segments,
         "metrics": {"build_wall_sec": wall, "docs_per_sec": n_total / wall if wall else 0},
     }
-    if bloom:
+    if bloom and segments:
         write_blooms(spark, index_dir, [s["seg"] for s in segments])
     _write_manifest(index_dir, manifest)
     return manifest
@@ -854,9 +857,13 @@ def read_manifest(index_dir: str) -> dict:
 
 
 def load_postings(spark: SparkSession, index_dir: str) -> DataFrame:
-    # exclude the per-segment docs sidecar rows (real terms never start \x00)
-    return spark.read.parquet(os.path.join(index_dir, "postings")).where(
-        F.col("term") != DOCS_MARKER
+    # explicit schema: an index over an empty corpus has no postings file
+    # to infer one from.  Exclude the per-segment docs sidecar rows (real
+    # terms never start \x00)
+    return (
+        spark.read.schema(POSTINGS_SCHEMA)
+        .parquet(os.path.join(index_dir, "postings"))
+        .where(F.col("term") != DOCS_MARKER)
     )
 
 

@@ -13,8 +13,9 @@ MultiIndexSearcher plays the coordinator:
      SUMMED; n_docs and field-token totals likewise -> one global weight
      per term and one global norm cache (avgdl over all shards).
   2. scatter: every shard scores its segments with the SAME weights via
-     SegmentSearcher.scan_with_weights (per-segment kernels, norms via
-     seg-cogroup — each shard is one Spark job over its own parquet).
+     SegmentSearcher.scan_with_weights, which returns the shard's ordered
+     top-k (per-segment kernels and merge, in the coordinator or as one
+     Spark job over the shard's own parquet, by the shard's byte gate).
   3. gather: union + ordered merge LIMIT k (score desc, doc_id asc).
 
 Invariant (pinned by tests/test_multi_index.py): scores over a sharded
@@ -82,8 +83,8 @@ class MultiIndexSearcher:
         """Distributed TotalHitCount: sum of shard counts (doc ids are
         globally disjoint across shards by construction, and within a
         shard across segments) — each shard counts kernel-side per segment
-        via SegmentSearcher.count (numpy unique over decoded ids inside
-        the norms cogroup; spilled tombstones arrive as per-segment
-        slices), so no posting ever leaves its segment kernel and no
-        corpus-sized explode/distinct shuffle exists in the plan."""
+        via SegmentSearcher.count (numpy unique over decoded ids; spilled
+        tombstones arrive as per-segment slices), so no posting ever
+        leaves its segment kernel and no corpus-sized explode/distinct
+        shuffle exists in the plan."""
         return sum(s.count(terms, conjunctive=conjunctive) for s in self.shards)

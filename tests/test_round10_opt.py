@@ -295,22 +295,48 @@ def test_df_seek_matches_scan(spark, tmp_path):
     # and _dfs (the memoized front) agrees with the scan too
     ss._df_memo = {}
     assert ss._dfs(terms) == scan
+    # a repeated query term is counted once
+    ss._df_memo = {}
+    assert ss._dfs(["get_index", "get_index"]) == {"get_index": scan["get_index"]}
 
 
 def test_driver_path_matches_spark_path(spark, tmp_path):
     """The coordinator-local small-query execution must be output-identical
     (rows, values, ORDER) to the distributed kernel path on every mode —
-    wand, exhaustive, conjunctive — with manifest AND spilled tombstones,
-    and the cold search_segments path likewise."""
+    wand, exhaustive, conjunctive, count, caller-supplied weights — with
+    manifest AND spilled tombstones, and the cold search_segments path
+    likewise.  Conjunctions with a term absent from the index or present
+    in one segment only return only docs holding every term, as many as
+    count(conjunctive=True) allows."""
+    from lucene_solr_intervals_spark.analysis.tokenizer import ANALYZERS
     from lucene_solr_intervals_spark.corpus import generate_corpus
-    from lucene_solr_intervals_spark.index.segment import build_segments
+    from lucene_solr_intervals_spark.index.segment import (
+        build_segments,
+        merge_segments,
+        read_manifest,
+    )
     from lucene_solr_intervals_spark.search import wand as W
-    from lucene_solr_intervals_spark.streaming.nrt import delete_by_doc_ids
+    from lucene_solr_intervals_spark.streaming.nrt import (
+        append_segment_batch,
+        delete_by_doc_ids,
+    )
 
     corpus = generate_corpus(spark, 900)
     d = str(tmp_path / "dq_idx")
     build_segments(corpus, d, n_segments=6, id_col="doc_id",
                    text_col="content", n_docs_hint=900)
+    # an appended segment is the only one holding the batch marker
+    batch = [(900 + i, "get_index batchmarker" if i % 4 else "batchmarker")
+             for i in range(20)]
+    append_segment_batch(
+        spark.createDataFrame(batch, "doc_id long, content string"), d,
+        text_col="content",
+    )
+    tokens = {
+        int(r["doc_id"]): set(ANALYZERS["code"](r["content"])[0])
+        for r in corpus.select("doc_id", "content").collect()
+    }
+    tokens.update({i: set(ANALYZERS["code"](t)[0]) for i, t in batch})
 
     def both(fn):
         old = W._DRIVER_QUERY_MAX_BYTES
@@ -324,18 +350,17 @@ def test_driver_path_matches_spark_path(spark, tmp_path):
         return drv, dist
 
     def rows(df):
+        if isinstance(df, int):  # count
+            return df
         return [(r["doc_id"], float(r["score"])) for r in df.collect()]
 
+    conj_k = 10
+    conjunctions = [["get_index", "zz_absent"], ["get_index", "batchmarker"]]
     for stage in ("plain", "merged", "deleted", "spilled"):
         if stage == "merged":
             # multi-file / merged segments: a segment's rows must reach ONE
             # kernel call even when split across files (the r10 driver-path
             # per-file bug this stage regression-pins)
-            from lucene_solr_intervals_spark.index.segment import (
-                merge_segments,
-                read_manifest,
-            )
-
             live0 = [s["seg"] for s in read_manifest(d)["segments"]
                      if s["status"] == "done"]
             merge_segments(spark, d, live0[:3], new_seg=50)
@@ -345,8 +370,9 @@ def test_driver_path_matches_spark_path(spark, tmp_path):
                        ss0.search(["get_index"], k=5, mode="exhaustive").collect()]
             delete_by_doc_ids(d, victims)
         elif stage == "spilled":
-            delete_by_doc_ids(d, [1, 2, 3], spill_threshold=0)
+            delete_by_doc_ids(d, [1, 2, 3, 903], spill_threshold=0)
         ss = W.SegmentSearcher(spark, d)
+        w = ss._weights(["get_index", "merge_posting"])
         cases = [
             lambda: ss.search(["get_index"], k=10, mode="wand"),
             lambda: ss.search(["get_index", "merge_posting"], k=10, mode="wand"),
@@ -357,13 +383,42 @@ def test_driver_path_matches_spark_path(spark, tmp_path):
             lambda: ss.search(["zz_absent"], k=10),
             lambda: W.search_segments(spark, d, ["get_index"], k=10,
                                       mode="wand"),
+            lambda: ss.scan_with_weights(["get_index", "merge_posting"], w,
+                                         ss.cache, 10),
+            lambda: ss.count(["get_index", "merge_posting"]),
+            lambda: ss.count(["get_index", "merge_posting"], conjunctive=True),
+        ] + [
+            (lambda t=t: ss.search(t, k=conj_k, conjunctive=True))
+            for t in conjunctions
         ]
+        got = {}
         for i, fn in enumerate(cases):
             drv, dist = both(fn)
             rd, rs = rows(drv), rows(dist)
-            assert rd == rs, (stage, i, rd[:3], rs[:3])
-            if i == 0:
-                assert rd, (stage, "vacuous")
+            assert rd == rs, (stage, i, rd if isinstance(rd, int) else rd[:3],
+                              rs if isinstance(rs, int) else rs[:3])
+            got[i] = rd
+            if i in (0, 7, 8):
+                assert rd, (stage, i, "vacuous")
+        dead = set(ss.tombstones)
+        if ss._spilled:
+            from lucene_solr_intervals_spark.index.segment import (
+                read_spilled_tombstones,
+            )
+
+            dead |= read_spilled_tombstones(d)
+        if stage in ("deleted", "spilled"):
+            assert dead
+        # search_segments honours tombstones
+        assert not {doc for doc, _ in got[5]} & dead, stage
+        assert got[5] == got[0], stage
+        for j, terms in enumerate(conjunctions):
+            hits = got[len(cases) - len(conjunctions) + j]
+            n = ss.count(terms, conjunctive=True)
+            assert len(hits) == min(conj_k, n), (stage, terms, len(hits), n)
+            assert all(set(terms) <= tokens[doc] for doc, _ in hits), (stage, terms)
+            assert not {doc for doc, _ in hits} & dead, (stage, terms)
+        assert got[len(cases) - 1], (stage, "vacuous")
 
 
 def test_build_index_aggregated_matches_groupby(spark):

@@ -4,8 +4,8 @@
    session timeZone pinned UTC) — no int(dt.timestamp()) host-TZ leak.
 2. forpack: a stream truncated to a lone trailing header byte raises the
    intended ValueError, not IndexError.
-3. search_many(prune_df=...): big rows on an index WITHOUT block-max
-   metadata fall back to the batched small path instead of KeyError.
+3. search_many on a postings relation WITHOUT block-max metadata answers
+   like the full relation instead of KeyError-ing.
 4. single-partition windows are gone: kmeans seed selection and the
    search_after_page2 driver query use no Window at all (plan + source
    asserts).
@@ -76,10 +76,10 @@ def test_for_decode_truncated_header_raises_valueerror():
         for_decode(buf[:-1])
 
 
-# ------------------------------------- 3. prune_df without block metadata
+# --------------------------------- 3. search_many without block metadata
 def test_search_many_prune_df_no_block_meta(spark, tmp_path):
-    """An index whose postings lack block-max sidecars must not KeyError
-    when prune_df is set — big rows route through the batched path."""
+    """An index whose postings lack block-max sidecars must not KeyError in
+    search_many, and must return what the full relation returns."""
     from lucene_solr_intervals_spark.index.segment import build_segments
     from lucene_solr_intervals_spark.search.wand import SegmentSearcher
 
@@ -94,12 +94,12 @@ def test_search_many_prune_df_no_block_meta(spark, tmp_path):
     )
     s = SegmentSearcher(spark, idx)
     base = s.search_many(["alpha"], k=5).collect()
-    # strip the block-meta columns the pruned path needs
+    # strip the block-meta columns
     pruned = SegmentSearcher(spark, idx)
     pruned.postings = pruned.postings.drop(
         "block_max_tf", "block_max_nb", "block_id_offs", "block_tf_offs", "block_last"
     )
-    got = pruned.search_many(["alpha"], k=5, prune_df=0).collect()
+    got = pruned.search_many(["alpha"], k=5).collect()
     key = lambda r: (r["query_term"], r["doc_id"])
     assert sorted(map(key, got)) == sorted(map(key, base))
 

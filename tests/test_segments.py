@@ -362,10 +362,9 @@ def test_norms_never_broadcast(spark, index_dir):
 
 
 def test_search_many_pruned_path_rank_safe(spark, tmp_path):
-    """Heavy terms (df >> 256 per segment) route through the block-max
-    pruned per-term decode (_pruned_term_topk); ranks and scores must
-    equal the exhaustive single-query path exactly, with and without
-    tombstones."""
+    """The batched search_many kernel on heavy terms (df >> 256 per
+    segment): ranks and scores must equal the exhaustive single-query path
+    exactly, with and without tombstones."""
     from lucene_solr_intervals_spark.corpus import generate_corpus
     from lucene_solr_intervals_spark.index.segment import build_segments
     from lucene_solr_intervals_spark.search.wand import SegmentSearcher
@@ -378,11 +377,11 @@ def test_search_many_pruned_path_rank_safe(spark, tmp_path):
     ss = SegmentSearcher(spark, d)
     terms = ["get_index", "merge_posting", "scan_segment", "read_term",
              "flush_segment"]
-    # confirm at least one term actually exercises the pruned branch
+    # confirm at least one term is heavy
     dfs = ss._dfs(terms)
     assert max(dfs.values()) > 512, dfs
     batch = {}
-    for r in ss.search_many(terms, k=10, prune_df=256).collect():
+    for r in ss.search_many(terms, k=10).collect():
         batch.setdefault(r["query_term"], []).append(
             (r["rank"], r["doc_id"], round(float(r["score"]), 6))
         )
@@ -400,7 +399,7 @@ def test_search_many_pruned_path_rank_safe(spark, tmp_path):
     ss2 = SegmentSearcher(spark, d)
     batch2 = [
         (r["rank"], r["doc_id"], round(float(r["score"]), 6))
-        for r in ss2.search_many([heavy], k=10, prune_df=256).collect()
+        for r in ss2.search_many([heavy], k=10).collect()
         if r["query_term"] == heavy
     ]
     single2 = [
@@ -409,3 +408,85 @@ def test_search_many_pruned_path_rank_safe(spark, tmp_path):
     ]
     assert sorted(batch2) == single2
     assert not set(top[:5]) & {d_ for _, d_, _ in batch2}
+
+
+@pytest.mark.parametrize("tail", ["driver", "spark"])
+def test_empty_corpus_index(spark, tmp_path, monkeypatch, tail):
+    """build_segments over zero rows writes a valid manifest on both build
+    tails, and a searcher over it answers every query with nothing."""
+    from pyspark.sql import types as T
+
+    from lucene_solr_intervals_spark.search.wand import SegmentSearcher
+
+    hint = 0
+    if tail == "spark":
+        # the Spark tail runs when the hinted sidecar bytes exceed the gate
+        monkeypatch.setenv("LSI_DRIVER_BUILD_MAX_BYTES", "0")
+        hint = 1
+    schema = T.StructType([T.StructField("doc_id", T.LongType()),
+                           T.StructField("text", T.StringType())])
+    d = str(tmp_path / f"empty_{tail}")
+    m = build_segments(spark.createDataFrame([], schema), d, n_segments=2,
+                       id_col="doc_id", n_docs_hint=hint)
+    assert m["n_docs"] == 0 and read_manifest(d)["n_docs"] == 0
+    ss = SegmentSearcher(spark, d)
+    assert ss.search(["w1"], k=10).collect() == []
+    assert ss.search(["w1", "w2"], k=10, conjunctive=True).collect() == []
+    assert ss.count(["w1"]) == 0
+    assert ss.search_many(["w1", "w2"], k=10).collect() == []
+
+
+def test_every_writer_emits_skip_data(spark, corpus, tmp_path, monkeypatch):
+    """Every postings row (sidecar markers aside) carries skip offsets, one
+    per 128-doc block, from every writer: both build tails, NRT append,
+    merge with and without reclaimed deletes, salted merge.  This is why
+    segment_topk_kernel has no decode-all block-max branch: postings
+    without skip data only come from a relation stripped of it."""
+    import shutil
+
+    from lucene_solr_intervals_spark.index.segment import DOCS_MARKER
+    from lucene_solr_intervals_spark.streaming.nrt import (
+        append_segment_batch,
+        delete_by_doc_ids,
+    )
+
+    def check(d, segs):
+        rows = (
+            spark.read.parquet(f"{d}/postings")
+            .where(F.col("seg").isin(segs) & (F.col("term") != DOCS_MARKER))
+            .select("seg", "df", "block_id_offs", "block_tf_offs")
+            .collect()
+        )
+        assert rows, (d, segs)
+        for r in rows:
+            n_blocks = (r["df"] + 127) // 128
+            for c in ("block_id_offs", "block_tf_offs"):
+                assert r[c] is not None, (d, r["seg"], c)
+                assert len(r[c]) == 8 * n_blocks, (d, r["seg"], c, r["df"])
+        return max(r["df"] for r in rows)
+
+    built = {}
+    for tail in ("driver", "spark"):
+        if tail == "spark":
+            monkeypatch.setenv("LSI_DRIVER_BUILD_MAX_BYTES", "0")
+        d = built[tail] = str(tmp_path / tail)
+        build_segments(corpus, d, n_segments=2, id_col="doc_id", analyzer="code")
+        assert check(d, [0, 1]) > 128  # multi-block rows are covered
+    monkeypatch.delenv("LSI_DRIVER_BUILD_MAX_BYTES")
+
+    d = built["driver"]
+    append_segment_batch(
+        spark.createDataFrame([(400 + i, "w1 w2 w3") for i in range(200)],
+                              ["doc_id", "text"]), d,
+    )
+    check(d, [2])
+    plain, reclaim, salted = (str(tmp_path / n) for n in ("m0", "m1", "m2"))
+    for dst in (plain, reclaim, salted):
+        shutil.copytree(d, dst)
+    merge_segments(spark, plain, [0, 1, 2], new_seg=10)
+    check(plain, [10])
+    delete_by_doc_ids(reclaim, [3, 250, 401])
+    merge_segments(spark, reclaim, [0, 1, 2], new_seg=10)
+    check(reclaim, [10])
+    merge_segments(spark, salted, [0, 1, 2], new_seg=10, salt=2)
+    check(salted, [10])
